@@ -19,6 +19,10 @@ Design decisions (SURVEY.md §7):
   ``__err__``; error rows flow *positionally* through every operator and an
   uncaught error re-raises at action time — the Spark translation of the
   reference's consumer-side re-raise (streamable/iterators.py:472-486).
+  Keyed operators carry error rows through their own shuffle as singletons
+  keyed by ``__seq__`` rather than splitting them off and unioning them
+  back: Spark cannot share a ``mapInPandas`` output between two branches,
+  so a split would re-run every upstream callable once per branch.
 - **Fast path first.** Column-expression forms of map/filter stay entirely
   JVM-side (whole-stage codegen); Python callables go through Arrow-batched
   ``mapInPandas`` — never row-at-a-time serde.
@@ -601,8 +605,6 @@ class Stream:
         order ops cache their input, which is a consumer-side pattern, not a
         100 TB one.
         """
-        from pyspark.storagelevel import StorageLevel
-
         try:
             est = int(
                 df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -618,12 +620,7 @@ class Stream:
                 ResourceWarning,
                 stacklevel=3,
             )
-        n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-        ranged = (
-            df.repartitionByRange(n_parts, F.col(SEQ_COL))
-            .withColumn("__pid__", F.spark_partition_id())
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
+        ranged = Stream._range_by_seq(df)
         stats = ranged.groupBy("__pid__").agg(
             F.sum(flag.cast("long")).alias("__cnt__"), F.min(SEQ_COL).alias("__mn__")
         )
@@ -645,6 +642,22 @@ class Stream:
         )
         return ranked, ranged
 
+    @staticmethod
+    def _range_by_seq(df: DataFrame) -> DataFrame:
+        """Range-repartition by seq, tag ``__pid__``, lazily persist: the
+        shared input of a two-phase global-order pass. Both of its readers
+        (the per-partition stats and the main branch) must see the SAME
+        partitioning — see ``_ranked`` for why this is a persist. The
+        caller threads the handle into ``_caches`` for ``release()``."""
+        from pyspark.storagelevel import StorageLevel
+
+        n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+        return (
+            df.repartitionByRange(n_parts, F.col(SEQ_COL))
+            .withColumn("__pid__", F.spark_partition_id())
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+
     def _plan_width(self) -> int:
         """Metadata-only estimate of this plan's output partition width.
 
@@ -664,11 +677,15 @@ class Stream:
         3. ``defaultParallelism`` for ``spark.range`` plans, else 1
            (in-memory LocalRelation).
 
-        ``sparkPlan`` only runs analysis+planning (no job); ``inputFiles``
-        reads the FileIndex listing cached at ``spark.read`` time.
+        The plan read is the prepared ``executedPlan``: under AQE its string
+        is the not-yet-executed initial plan, after ``EnsureRequirements``
+        has inserted the exchanges a ``groupBy``/join needs (``sparkPlan``
+        is pre-preparation and shows none). Preparation runs no job;
+        ``inputFiles`` reads the FileIndex listing cached at ``spark.read``
+        time.
         """
         df = self._df
-        plan = df._jdf.queryExecution().sparkPlan().toString()
+        plan = df._jdf.queryExecution().executedPlan().toString()
         for line in plan.splitlines():
             if "BroadcastExchange" in line:
                 continue  # broadcast is replication, not a width change
@@ -910,61 +927,67 @@ class Stream:
 
         In batch, a group is never cut by an upstream error (all data is
         present); error rows pass through positionally with a null group.
+        They ride the grouping's own shuffle as singleton groups keyed by
+        their ``__seq__`` (``_co_group``), so the input is read once and
+        every upstream callable runs once per action. A raising ``by``
+        callable turns its row into such an error row, never a null-key
+        group.
         """
         if interval is not None:
             warnings.warn("group(interval=...) is a no-op in batch; see kioss_spark.streaming")
         vcol = self._data_cols[0]
-        elem_t = self._value_type
-        caches = self._caches
         df = self._ensure_err()
-        ok = df.where(F.col(ERR_COL).isNull())
-        err_frames = []
-        if self._has_err:
-            err_frames.append(df.where(F.col(ERR_COL).isNotNull()).select(SEQ_COL, ERR_COL))
-        sv = F.sort_array(F.collect_list(F.struct(F.col(SEQ_COL).alias("s"),
-                                                  F.col(vcol).alias("v"))))
+        caches = self._caches
         if by is not None:
-            keyed, keycol = self._keyed(ok, by)
-            # a raising key callable fills __err__ on previously-ok rows:
-            # those propagate as error rows, not as a null-key group
-            key_errs = keyed.where(F.col(ERR_COL).isNotNull())
-            if not isinstance(by, (Column, str)):
-                err_frames.append(key_errs.select(SEQ_COL, ERR_COL))
-                keyed = keyed.where(F.col(ERR_COL).isNull())
-            grouped = keyed.groupBy(keycol).agg(sv.alias("__sv__"))
+            df, keycol = self._keyed(df, by)
+        elif size is None:
+            raise ValueError("group() needs size=, by=, or interval=")
         else:
-            if size is None:
-                raise ValueError("group() needs size=, by=, or interval=")
-            ranked, rank_cache = self._ranked(ok, F.lit(True))
+            # error rows are never counted into a batch
+            df, rank_cache = self._ranked(df, F.col(ERR_COL).isNull())
             caches = caches + (rank_cache,)
-            grouped = (
-                ranked
-                .withColumn("__bid__", ((F.col("__rn__") - 1) / size).cast("long"))
-                .groupBy("__bid__").agg(sv.alias("__sv__"))
-            )
-        if size is not None:
-            # split each key's ordered list into size-chunks (arrays are local)
-            n_chunks = F.ceil(F.size("__sv__") / size).cast("int")
-            grouped = grouped.select(
-                F.explode(F.transform(F.sequence(F.lit(0), n_chunks - 1),
-                                      lambda i: F.slice("__sv__", i * size + 1, size))
-                          ).alias("__sv__")
-            )
-        out = grouped.select(
-            F.col("__sv__")[0]["s"].alias(SEQ_COL),
-            F.transform("__sv__", lambda x: x["v"]).alias(_VALUE),
-            F.lit(None).cast(ERR_TYPE).alias(ERR_COL),
-        )
-        for ef in err_frames:
-            out = out.unionByName(
-                ef.select(
-                    F.col(SEQ_COL),
-                    F.lit(None).cast(T.ArrayType(elem_t)).alias(_VALUE),
-                    F.col(ERR_COL),
-                )
-            )
+            keycol = ((F.col("__rn__") - 1) / size).cast("long")
+        out = self._co_group(df, keycol, vcol, size).drop("__gk__")
         return self._derive(out, f"group(size={size}, by={by is not None or None})",
                             caches=caches)
+
+    @staticmethod
+    def _co_group(df: DataFrame, key: Column, vcol: str, size: Optional[int]) -> DataFrame:
+        """One-pass keyed grouping with errors as data -> ``(__gk__, __seq__,
+        value, __err__)``.
+
+        Ok rows group on ``key``: ``value`` is the group's values in seq
+        order (cut into ``size``-chunks when given), ``__seq__`` its first
+        element's seq. Each error row forms its own group, keyed by its own
+        seq, and comes out as ``(null, its seq, null, its err)``. Both kinds
+        share one shuffle — no error/ok split, so the input (and every
+        Python callable upstream of it) is read once."""
+        ok = F.col(ERR_COL).isNull()
+        grouped = df.groupBy(
+            F.when(ok, key).alias("__gk__"),
+            F.when(~ok, F.col(SEQ_COL)).alias("__eseq__"),
+        ).agg(
+            F.sort_array(F.collect_list(F.when(ok, F.struct(
+                F.col(SEQ_COL).alias("s"), F.col(vcol).alias("v")
+            )))).alias("__sv__"),
+            F.first(ERR_COL, ignorenulls=True).alias(ERR_COL),
+        )
+        if size is not None:
+            # split each key's ordered list into size-chunks (arrays are
+            # local); an error group's null chunk list explodes to one row
+            n_chunks = F.ceil(F.size("__sv__") / size).cast("int")
+            chunks = F.transform(F.sequence(F.lit(0), n_chunks - 1),
+                                 lambda i: F.slice("__sv__", i * size + 1, size))
+            grouped = grouped.select(
+                "__gk__", "__eseq__", ERR_COL,
+                F.explode_outer(F.when(ok, chunks)).alias("__sv__"),
+            )
+        return grouped.select(
+            "__gk__",
+            F.when(ok, F.col("__sv__")[0]["s"]).otherwise(F.col("__eseq__")).alias(SEQ_COL),
+            F.when(ok, F.transform("__sv__", lambda x: x["v"])).alias(_VALUE),
+            ERR_COL,
+        )
 
     def group_within_partitions(self, size: int) -> "Stream":
         """Partition-local batching: arrays of up to ``size`` elements in
@@ -1027,58 +1050,26 @@ class Stream:
         """Like ``group(by=key)`` but yields ``(key, values)`` pairs
         (reference: streamable/stream.py:348-370) → columns ``key, value``.
         The reference's full/largest/oldest flush policy is a streaming
-        micro-batch concern (SURVEY.md §2.1#9); batch flush = exhaustion."""
+        micro-batch concern (SURVEY.md §2.1#9); batch flush = exhaustion.
+
+        Uncaught upstream and key-callable errors flow through positionally
+        with a null key (the reference re-raises at the consumer —
+        GroupbyIterator, streamable/iterators.py:193-206), riding the
+        grouping's shuffle as seq-keyed singletons (``_co_group``): one
+        read of the input, every callable run once per action."""
         if interval is not None:
             warnings.warn("groupby(interval=...) is a no-op in batch; see kioss_spark.streaming")
         vcol = self._data_cols[0]
-        elem_t = self._value_type
-        df = self._ensure_err()
-        ok = df.where(F.col(ERR_COL).isNull())
-        err_frames = []
-        if self._has_err:
-            err_frames.append(df.where(F.col(ERR_COL).isNotNull()).select(SEQ_COL, ERR_COL))
-        keyed, keycol = self._keyed(ok, key)
-        if not isinstance(key, (Column, str)):
-            # raising key callable -> error rows, never a null-key group
-            err_frames.append(
-                keyed.where(F.col(ERR_COL).isNotNull()).select(SEQ_COL, ERR_COL)
-            )
-            keyed = keyed.where(F.col(ERR_COL).isNull())
-        sv = F.sort_array(F.collect_list(F.struct(F.col(SEQ_COL).alias("s"),
-                                                  F.col(vcol).alias("v"))))
-        grouped = keyed.groupBy(keycol.alias("key")).agg(sv.alias("__sv__"))
-        if size is not None:
-            n_chunks = F.ceil(F.size("__sv__") / size).cast("int")
-            grouped = grouped.select(
-                "key",
-                F.explode(F.transform(F.sequence(F.lit(0), n_chunks - 1),
-                                      lambda i: F.slice("__sv__", i * size + 1, size))
-                          ).alias("__sv__"),
-            )
-        out = grouped.select(
-            F.col("__sv__")[0]["s"].alias(SEQ_COL),
-            F.col("key"),
-            F.transform("__sv__", lambda x: x["v"]).alias(_VALUE),
-            F.lit(None).cast(ERR_TYPE).alias(ERR_COL),
+        keyed, keycol = self._keyed(self._ensure_err(), key)
+        out = self._co_group(keyed, keycol, vcol, size).select(
+            SEQ_COL, F.col("__gk__").alias("key"), _VALUE, ERR_COL
         )
-        # uncaught upstream/key errors flow through positionally with a null
-        # key (reference re-raises at the consumer — GroupbyIterator,
-        # streamable/iterators.py:193-206); _pre-action re-raise still fires
-        key_t = out.schema["key"].dataType
-        for ef in err_frames:
-            out = out.unionByName(
-                ef.select(
-                    F.col(SEQ_COL),
-                    F.lit(None).cast(key_t).alias("key"),
-                    F.lit(None).cast(T.ArrayType(elem_t)).alias(_VALUE),
-                    F.col(ERR_COL),
-                )
-            )
         return self._derive(out, f"groupby(size={size})")
 
     def _keyed(self, df: DataFrame, by: Any):
         """Return (df_with_key, key_column). Callable keys go through the
-        Arrow path; Column/str keys stay JVM-side."""
+        Arrow path, once over all rows: rows with a prior error are skipped
+        and a raising key fills ``__err__``. Column/str keys stay JVM-side."""
         if isinstance(by, Column):
             return df, by
         if isinstance(by, str):
@@ -1095,57 +1086,64 @@ class Stream:
         min-seq window here, which *does* spill and scale, unlike the
         reference's unbounded set, streamable/iterators.py:105-113).
 
+        Error rows (upstream errors and rows whose ``key`` callable raised)
+        are never deduplicated: each rides the key shuffle as its own
+        singleton partition, keyed by its ``__seq__``, so the input is read
+        once and every upstream callable runs once per action.
+
         ``consecutive_only=True`` is the O(1)-memory variant: a lag window.
         Note: consecutive dedup is inherently sequential — the global-order
         window is single-partition; for 100 TB data use ``distinct(key)``.
         """
         vcol = self._data_cols[0]
         df = self._ensure_err()
-        ok = df.where(F.col(ERR_COL).isNull())
-        if key is None:
-            keyed, keycol = ok, F.col(vcol)
+        keyed, keycol = (df, F.col(vcol)) if key is None else self._keyed(df, key)
+        ok = F.col(ERR_COL).isNull()
+        caches = self._caches
+        if not consecutive_only:
+            w = Window.partitionBy(
+                F.when(ok, keycol), F.when(~ok, F.col(SEQ_COL))
+            ).orderBy(F.col(SEQ_COL))
+            kept = keyed.withColumn("__rn__", F.row_number().over(w)).where(
+                ~ok | (F.col("__rn__") == 1)
+            )
         else:
-            keyed, keycol = self._keyed(ok, key)
-        if consecutive_only:
             # two-phase global lag: partition-local lag + each partition's
-            # first row reads the PREVIOUS partition's last key (one stats
-            # row per partition; no single-partition window over data)
-            # lazy localCheckpoint: same cross-branch pid-consistency barrier
-            # as _ranked (stats + main must see identical partitioning)
-            ranged = keyed.withColumn("__k__", keycol).repartitionByRange(
-                F.col(SEQ_COL)
-            ).withColumn("__pid__", F.spark_partition_id()).localCheckpoint(eager=False)
+            # first row reads the PREVIOUS partitions' last key (one stats
+            # row per partition; no single-partition window over data).
+            # ``__k__`` wraps the key in a struct that is null exactly on
+            # error rows, so ``ignorenulls`` skips errors (they neither
+            # dedup nor break a run) but not null keys.
+            ranged = self._range_by_seq(
+                keyed.withColumn("__k__", F.when(ok, F.struct(keycol.alias("k"))))
+            )
+            caches = caches + (ranged,)
             stats = ranged.groupBy("__pid__").agg(
-                F.max_by("__k__", F.col(SEQ_COL)).alias("__plast__"),
+                F.max_by("__k__", F.when(ok, F.col(SEQ_COL))).alias("__plast__"),
                 F.min(SEQ_COL).alias("__mn__"),
             )
-            w_off = Window.orderBy("__mn__")
+            before = (Window.unboundedPreceding, -1)
+            w_off = Window.orderBy("__mn__").rowsBetween(*before)
             prevs = stats.select(
-                "__pid__", F.lag("__plast__").over(w_off).alias("__prevlast__")
+                "__pid__",
+                F.last("__plast__", ignorenulls=True).over(w_off).alias("__prevlast__"),
             )
-            w_loc = Window.partitionBy("__pid__").orderBy(F.col(SEQ_COL))
+            w_loc = (
+                Window.partitionBy("__pid__").orderBy(F.col(SEQ_COL)).rowsBetween(*before)
+            )
+            k = F.col("__k__")["k"]
             kept = (
                 ranged.join(F.broadcast(prevs), "__pid__")
                 .withColumn(
                     "__prev__",
-                    F.coalesce(F.lag("__k__").over(w_loc), F.col("__prevlast__")),
+                    F.coalesce(F.last("__k__", ignorenulls=True).over(w_loc),
+                               F.col("__prevlast__")),
                 )
-                .where(
-                    F.col("__prev__").isNull()
-                    | ~(F.col("__prev__") == F.col("__k__"))
-                    | F.col("__k__").isNull()
-                )
-                .drop("__pid__", "__prevlast__", "__k__")
+                .where(~ok | k.isNull() | ~F.col("__prev__")["k"].eqNullSafe(k))
             )
-        else:
-            w = Window.partitionBy(keycol).orderBy(F.col(SEQ_COL))
-            kept = keyed.withColumn("__rn__", F.row_number().over(w)).where(F.col("__rn__") == 1)
-        kept = kept.select(SEQ_COL, vcol, ERR_COL)
-        if self._has_err:
-            kept = kept.unionByName(
-                df.where(F.col(ERR_COL).isNotNull()).select(SEQ_COL, vcol, ERR_COL)
-            )
-        return self._derive(kept, f"distinct(consecutive_only={consecutive_only})")
+        return self._derive(kept.select(SEQ_COL, vcol, ERR_COL),
+                            f"distinct(consecutive_only={consecutive_only})",
+                            caches=caches)
 
     # ------------------------------------------------------------ skip/truncate
 
@@ -1468,8 +1466,7 @@ class Stream:
                 F.col(ERR_COL)["kind"] == name,
             )
         if when is not None:
-            flagged = self._map_err_pred(when)
-            self_df = self._df.join(flagged, SEQ_COL, "left")
+            self_df = self._with_err_pred(when)
             matches = matches & F.coalesce(F.col("__when__"), F.lit(False))
         else:
             self_df = self._df
@@ -1491,22 +1488,32 @@ class Stream:
                                 f"finally_raise={finally_raise})",
                             finally_dfs=finally_dfs)
 
-    def _map_err_pred(self, when: Callable) -> DataFrame:
-        """Evaluate ``when`` over error payloads -> (seq, __when__ bool)."""
-        df = self._df.where(F.col(ERR_COL).isNotNull())
-        schema = T.StructType([_seq_field(), T.StructField("__when__", T.BooleanType(), True)])
+    def _with_err_pred(self, when: Callable) -> DataFrame:
+        """Append ``__when__`` = ``when`` over each error row's rebuilt
+        exception (a raising ``when`` counts as False), null on ok rows.
+
+        One ``mapInPandas`` over all rows, in place: no error-filtered
+        second read of the input, no join back on ``__seq__``."""
+        df = self._df
+        schema = T.StructType(
+            list(df.schema.fields) + [T.StructField("__when__", T.BooleanType(), True)]
+        )
+
+        def flag(e):
+            if e is None:
+                return None
+            try:
+                return bool(when(rebuild_exception(e["kind"], e["message"])))
+            except Exception:  # noqa: BLE001
+                return False
 
         def compute(batches):
             for pdf in batches:
-                seqs = pdf[SEQ_COL].tolist()
-                flags = []
-                for e in pdf[ERR_COL].tolist():
-                    exc = rebuild_exception(e["kind"], e["message"])
-                    try:
-                        flags.append(bool(when(exc)))
-                    except Exception:  # noqa: BLE001
-                        flags.append(False)
-                yield pd.DataFrame({SEQ_COL: seqs, "__when__": flags})
+                res = pdf.copy()
+                res["__when__"] = pd.Series(
+                    [flag(e) for e in pdf[ERR_COL].tolist()], index=pdf.index, dtype=object
+                )
+                yield res
 
         return df.mapInPandas(compute, schema=schema)
 

@@ -199,3 +199,91 @@ def test_filter_noarg_drops_falsy(spark):
     assert s.collect() == ["a", "b", "c"]
     s2 = Stream.of(spark, [0, 1, 2, 0, 3]).filter()
     assert s2.collect() == [1, 2, 3]
+
+
+def zde_on_odd(x):
+    if x % 2 == 1:
+        raise ZeroDivisionError(f"odd: {x}")
+    return str(x)
+
+
+def test_distinct_raising_key_keeps_every_error_row(spark):
+    # every row whose key callable raised is its own error row — none is
+    # deduplicated against another (they all have a null key)
+    s = Stream.of(spark, [1, 2, 3, 4, 5, 6]).distinct(key=zde_on_odd)
+    assert s.catch(ZeroDivisionError, replacement=-1).collect() == [-1, 2, -1, 4, -1, 6]
+
+
+def test_group_by_raising_key_keeps_every_error_row(spark):
+    s = Stream.of(spark, [1, 2, 3, 4, 5, 6, 2]).group(by=zde_on_odd)
+    rows = s.to_df(keep_err=True).collect()
+    assert [(r["value"], r["__err__"] and r["__err__"]["kind"]) for r in rows] == [
+        (None, "ZeroDivisionError"), ([2, 2], None),
+        (None, "ZeroDivisionError"), ([4], None),
+        (None, "ZeroDivisionError"), ([6], None),
+    ]
+    assert s.catch(ZeroDivisionError).collect() == [[2, 2], [4], [6]]
+    # size-chunked: each chunk sits at its first element, errors stay singletons
+    chunked = Stream.of(spark, [1, 2, 3, 4, 5, 6, 2]).group(by=zde_on_odd, size=1)
+    assert chunked.catch(ZeroDivisionError, replacement=[-1]).collect() == [
+        [-1], [2], [-1], [4], [-1], [6], [2]
+    ]
+
+
+def test_groupby_raising_key_keeps_every_error_row(spark):
+    s = Stream.of(spark, [1, 2, 3, 4, 5, 6, 2]).groupby(zde_on_odd)
+    rows = s.to_df(keep_err=True).collect()
+    assert [(r["key"], r["value"], r["__err__"] and r["__err__"]["kind"]) for r in rows] == [
+        (None, None, "ZeroDivisionError"), ("2", [2, 2], None),
+        (None, None, "ZeroDivisionError"), ("4", [4], None),
+        (None, None, "ZeroDivisionError"), ("6", [6], None),
+    ]
+    got = s.catch(ZeroDivisionError).collect()
+    assert [(r["key"], r["value"]) for r in got] == [("2", [2, 2]), ("4", [4]), ("6", [6])]
+
+
+def test_distinct_keeps_upstream_error_rows(spark):
+    # upstream error rows all carry a null value: none may dedup another
+    s = Stream.range(spark, 6).map(throw_on_odd, returnType=T.LongType())
+    for consecutive in (False, True):
+        out = s.distinct(consecutive_only=consecutive).catch(ValueError, replacement=-1)
+        assert out.collect() == [0, -1, 20, -1, 40, -1]
+
+
+def throw_on_three(x):
+    if x == 3:
+        raise ValueError("three")
+    return x
+
+
+def test_consecutive_distinct_errors_do_not_break_runs(spark):
+    # an error between two equal elements neither dedups nor resets the
+    # run: the element after it still compares with the last ok element
+    s = (
+        Stream.of(spark, [1, 1, 3, 1, 2, 2])
+        .map(throw_on_three, returnType=T.LongType())
+        .distinct(consecutive_only=True)
+        .catch(ValueError, replacement=-1)
+    )
+    assert s.collect() == [1, -1, 2]
+
+
+def test_group_size_passes_error_rows_positionally(spark):
+    s = Stream.range(spark, 8).map(throw_on_odd, returnType=T.LongType()).group(size=2)
+    rows = s.to_df(keep_err=True).collect()
+    assert [r["value"] for r in rows] == [[0, 20], None, None, [40, 60], None, None]
+    assert all((r["value"] is None) == (r["__err__"] is not None) for r in rows)
+    with pytest.raises(ValueError, match="odd: 1"):
+        s.collect()
+    s.release()  # neither to_df nor a raising action frees the rank pass
+
+
+def test_catch_when_replacement_in_place(spark):
+    s = (
+        Stream.range(spark, 8)
+        .map(throw_on_odd, returnType=T.LongType())
+        .catch(ValueError, when=lambda exc: "5" not in str(exc), replacement=-1)
+    )
+    rows = s.to_df(keep_err=True).collect()
+    assert [r["value"] for r in rows] == [0, -1, 20, -1, 40, None, 60, -1]
+    assert [r["__err__"] is not None for r in rows] == [i == 5 for i in range(8)]

@@ -322,3 +322,97 @@ def test_bm25_stats_scan_pruning(spark, sf_dir):
     assert got and got <= 2, (
         f"bm25_stats combine scan reads {got} columns (budget 2)"
     )
+
+
+# --------------------------------------------------------------- Stream chains
+#
+# Spark cannot share work between two branches that both read a
+# ``mapInPandas`` output, so an operator that splits its input (error rows
+# one way, ok rows the other) and unions the halves re-runs every upstream
+# Python callable once per branch.  The facade's contract is one run of each
+# callable per action: these gates count the ``MapInPandas`` nodes and
+# ``Union``s of the executed plan.
+
+
+def _parse(x):
+    if x % 7 == 3:
+        raise ValueError(f"bad {x}")
+    return x * 3 + 1
+
+
+def _keep(v):
+    return v % 4 != 0
+
+
+async def _enrich(v):
+    return (v * 7) % 5003
+
+
+def _spread(v):
+    return [v % 97, v % 89]
+
+
+def _bucket(v):
+    return str(v % 16)
+
+
+def _odd_raises(x):
+    if x % 2 == 1:
+        raise ValueError(f"odd {x}")
+    return x
+
+
+def _python_nodes(df):
+    """(MapInPandas, Union, join) node counts of the executed final plan."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    return plan.count("MapInPandas"), plan.count("Union"), plan.count("Join")
+
+
+def test_stream_chain_runs_each_callable_once(spark):
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from kioss_spark.stream import Stream
+
+    long_t = T.LongType()
+    s = (
+        Stream.from_df(spark.range(200).select(F.col("id").alias("value")), seq="value")
+        .map(_parse, returnType=long_t)
+        .catch(ValueError, replacement=-1)
+        .filter(_keep)
+        .amap(_enrich, returnType=long_t)
+        .map(_spread, returnType=T.ArrayType(long_t))
+        .flatten()
+        .distinct()
+        .group(by=_bucket)
+    )
+    # five callables: map, filter, amap, map, the group key
+    assert _python_nodes(s.to_df(ordered=False, keep_err=True))[:2] == (5, 0)
+
+
+def test_error_carrying_operators_read_input_once(spark):
+    from pyspark.sql import types as T
+
+    from kioss_spark.stream import Stream
+
+    errs = Stream.range(spark, 40).map(_odd_raises, returnType=T.LongType())
+    for name, s, n_python in (
+        ("distinct", errs.distinct(), 1),
+        ("distinct(key=fn)", errs.distinct(key=_bucket), 2),
+        ("distinct(consecutive)", errs.distinct(consecutive_only=True), None),
+        ("group(by=fn)", errs.group(by=_bucket), 2),
+        ("group(size=)", errs.group(size=3), None),
+        ("groupby(fn)", errs.groupby(_bucket), 2),
+        ("catch(when=)", errs.catch(ValueError, when=lambda e: "1" in str(e)), 2),
+    ):
+        python, unions, joins = _python_nodes(s.to_df(ordered=False, keep_err=True))
+        assert unions == 0, f"{name}: error rows split off and unioned back"
+        if n_python is not None:
+            # cached inputs (group(size)'s rank pass, the consecutive
+            # form's checkpoint) print their plan once per reader
+            assert python == n_python, f"{name}: {python} MapInPandas, want {n_python}"
+        if name == "catch(when=)":
+            assert joins == 0, f"{name}: predicate joined back on __seq__"
+        s.release()
